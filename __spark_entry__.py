@@ -676,8 +676,8 @@ def q_wand_sloppy_phrase_topk(spark, sf_dir):
 
 
 def q_wand_msm_topk(spark, sf_dir):
-    """minimumNumberShouldMatch on the or-kernel (round 5): >=2 of
-    {merge, dup, vector} via the kernel's per-doc matched-pair count
+    """minimumNumberShouldMatch on the tree kernel: >=2 of
+    {merge, dup, vector} via the root node's matched-SHOULD count
     — same oracle as bool_msm_topk (bit-identical strategies)."""
     from lucene_clj_spark.wand import wand_pairs_topk
 
@@ -694,7 +694,7 @@ def q_wand_group_topk(spark, sf_dir):
     """Boolean GROUP TREE on the segment kernel: '(merge OR window)
     AND dup' parsed by the DSL, forced through strategy='wand' (raises
     if it fell off the kernel path) — same oracle as dsl_grouped_topk,
-    proving the group kernel's MUST-group accounting."""
+    proving the tree kernel's MUST-group accounting."""
     from lucene_clj_spark.query import parse_dsl
 
     idx = _wand_index(spark, sf_dir)
@@ -785,7 +785,7 @@ def q_wand_phrase_bool_topk(spark, sf_dir):
     """Mixed phrase+term boolean '"the merge" AND window' forced
     through strategy='wand' (raises if it fell off the kernel path):
     the phrase member is scored IN-SCAN from the segments' positions
-    streams by the group kernel (wand.PhraseMember) instead of a
+    streams by the tree kernel (wand.PhraseTreeLeaf) instead of a
     position join — one pruned pass, no join per clause."""
     from lucene_clj_spark.query import parse_dsl
 

@@ -788,41 +788,26 @@ def _scored_tree(index, leaves: list, root) -> DataFrame:
     return agg.filter(m_root).select("doc_id", s_root.alias("score"))
 
 
-def _group_tree_clauses(node: BoolQ, allow_phrase: bool = False) -> list | None:
+def _group_tree_clauses(node: BoolQ) -> list | None:
     """Return the (occ, child) clause list if ``node`` is a one-level
     term-only group tree executable by ``_scored_group_tree``, else
     None. Also requires at least one positive clause (a pure-negative
-    boolean matches nothing, handled by the generic path).
-
-    ``allow_phrase=True`` additionally admits PhraseQ leaves (direct
-    clauses or members of all-SHOULD groups) — used by the kernel
-    route, whose group kernel scores phrase members in-scan; the
-    DataFrame group compiler stays term-only (phrases there are
-    position joins)."""
-    def leaf_ok(c: Node) -> bool:
-        if _as_term(c) is not None:
-            return True
-        return (
-            allow_phrase
-            and isinstance(c, PhraseQ)
-            and bool(c.terms)
-            and c.slop == 0  # sloppy -> DataFrame matcher
-        )
-
+    boolean matches nothing, handled by the generic path)."""
     if node.boost != 1.0 or node.min_should_match:
         return None
     positive = False
     for occ, child in node.clauses:
         if occ not in (MUST, SHOULD, "MUST_NOT"):
             return None
-        if leaf_ok(child):
+        if _as_term(child) is not None:
             positive = positive or occ != "MUST_NOT"
             continue
         if not (
             isinstance(child, BoolQ)
             and child.clauses
             and child.min_should_match == 0  # msm -> counting compiler
-            and all(o == SHOULD and leaf_ok(c) for o, c in child.clauses)
+            and all(o == SHOULD and _as_term(c) is not None
+                    for o, c in child.clauses)
         ):
             return None
         positive = positive or occ != "MUST_NOT"
@@ -2083,25 +2068,31 @@ def compile_node(index, node: Node) -> DataFrame:
     raise ValidationError(f"cannot compile node {node!r}", {})
 
 
+#: route-time short-circuit: the query provably matches nothing
+_EMPTY_ROUTE = (None, None, "empty", None)
+
+
 def _wand_route(
     index, node: Node
-) -> tuple[str | None, Any, str, dict | None] | None:
+) -> tuple[str | None, Any, str, Any] | None:
     """Decide whether a query can execute on the segment kernels (the
-    scale path): a term / boosted term, a flat all-MUST / all-SHOULD
-    boolean of (possibly boosted) terms — SPANNING ANY MIX OF FIELDS,
-    e.g. a map query {title: ..., body: ...} (wand_pairs_topk runs a
-    field-keyed one-pass kernel) — an unboosted phrase, or a
-    single-field fuzzy — against a disk index with built segments.
+    scale path) of a disk index with built segments. Returns
+    (field, payload, mode, weight) or None (DataFrame fallback):
 
-    Returns (field, payload, mode, weights) or None:
-    - mode 'phrase'      -> (field, terms, ...)
-    - mode 'fuzzy'       -> (field, FuzzyQ node, ...)
-    - mode 'and' / 'or'  -> (None, [(field, term), ...], mode,
-                             {(field, term): boost} | None)
+    - mode 'tree' -> (None, (leaves, root), 'tree', None): every
+      boolean-family shape, one spec for wand.wand_tree_topk — a term,
+      a flat AND/OR over any mix of fields (a map query
+      {title: ..., body: ...}), min_should_match, fuzzy expansions,
+      group and nested trees with exact-phrase leaves, and term-like
+      DisMaxQ;
+    - mode 'empty' -> route-time short-circuit, the result is empty;
+    - the positional modes 'phrase', 'sloppy_phrase', 'span_or',
+      'span_near', 'span_first', 'span_not' -> (field, payload, mode,
+      boost) for their own kernels.
+
     Boosts ride as kernel weights (scores and block-max skip bounds
-    scale linearly, so pruning stays exact)."""
-    import os
-
+    scale linearly, so pruning stays exact); a non-positive one would
+    invert the bounds and falls back."""
     if not index.path:
         return None
     from lucene_clj_spark.segments import segments_ready
@@ -2118,13 +2109,7 @@ def _wand_route(
 
     node = _flatten(node)
     if isinstance(node, TermQ):
-        if node.field not in index.stats or node.boost <= 0:
-            # non-positive boosts invert the kernel's block-max upper
-            # bounds (pruning would skip true top-k docs) — fall back
-            return None
-        pair = (node.field, node.term)
-        w = {pair: node.boost} if node.boost != 1.0 else None
-        return (None, [pair], "or", w)
+        return _flat_route(index, [(MUST, node)])
     if isinstance(node, PhraseQ):
         if (
             node.boost <= 0  # non-positive boost inverts skip bounds
@@ -2143,18 +2128,24 @@ def _wand_route(
             if len(node.terms) == 1:
                 # Lucene rewrites one-term phrases to TermQuery (slop
                 # is moot) — same rewrite the DataFrame path applies
-                pair = (node.field, node.terms[0])
-                w = {pair: node.boost} if node.boost != 1.0 else None
-                return (None, [pair], "or", w)
+                return _flat_route(index, [(MUST, TermQ(
+                    node.boost, node.field, node.terms[0]))])
             return (node.field, node, "sloppy_phrase", None)
         # a positive boost rides into the kernel folded into idf_sum
         # (score and chunk bound scale linearly, pruning stays exact)
         w = node.boost if node.boost != 1.0 else None
         return (node.field, list(node.terms), "phrase", w)
     if isinstance(node, FuzzyQ):
+        # a weighted SHOULD node over the (memoized) expansions
         if node.field not in index.stats or node.boost <= 0:
             return None
-        return (node.field, node, "fuzzy", None)
+        exp = _fuzzy_expansions(index, node)
+        if not exp:
+            return _EMPTY_ROUTE
+        return _flat_route(index, [
+            (SHOULD, TermQ(fb * node.boost, node.field, t))
+            for t, _, fb in exp
+        ])
     if isinstance(node, SpanOrQ):
         # pooled-tf kernel (wand.span_or_topk); empty clause lists
         # raise in the DataFrame compiler, so let it validate
@@ -2201,217 +2192,103 @@ def _wand_route(
             return None
         return (node.field, node, "span_not", None)
     if isinstance(node, DisMaxQ):
-        if not (0.0 <= float(node.tie_breaker) <= 1.0):
-            return None  # the DataFrame compiler raises the error
+        # one SHOULD child per disjunct (a leaf, or a node over the
+        # disjunct's members sorted by (field, term) like the
+        # DataFrame plan's per-disjunct fold), combined by ``tie``
+        from lucene_clj_spark.wand import TreeLeaf, TreeNode
+
         groups = _dismax_term_groups(node)
         if not groups:
             return None
-        members = []
+        leaves, kids = [], []
         for g in groups:
-            ms = []
-            for f_, t_, b_ in g:
-                eb = b_ * node.boost
-                if eb <= 0 or f_ not in index.stats:
-                    # non-positive effective weights invert the
-                    # kernel's skip bounds — fall back (same hazard as
-                    # term boosts above)
-                    return None
-                ms.append((f_, t_, eb))
-            members.append((SHOULD, ms))
-        return (None, (members, float(node.tie_breaker)), "dismax", None)
+            lids = []
+            for f_, t_, b_ in sorted(g):
+                lids.append(len(leaves))
+                leaves.append(TreeLeaf(len(leaves), f_, t_,
+                                       b_ * node.boost, True))
+            kids.append(lids[0] if len(lids) == 1
+                        else TreeNode((), tuple(lids), ()))
+        return _spec_route(index, leaves, TreeNode(
+            (), tuple(kids), (), tie=float(node.tie_breaker)))
     if not (isinstance(node, BoolQ) and node.boost > 0 and node.clauses):
         # non-positive root boosts invert the kernels' skip bounds
         return None
     if node.min_should_match:
-        # minimumNumberShouldMatch: flat term booleans ride the
-        # kernels — all-SHOULD on the or-kernel (its per-doc
-        # matched-pair tally is exactly the tally _scored_term_group
-        # filters on), mixed MUST/SHOULD on the group kernel (per-doc
-        # distinct-SHOULD-group tally, one clause per group).
-        # Everything else (MUST_NOT/FILTER occurrences, fuzzy clauses,
-        # duplicate pairs — where the DataFrame fast path itself
-        # switches to the joins compiler) stays on the counting
-        # compiler.
+        # minimumNumberShouldMatch on a flat MUST/SHOULD term boolean:
+        # the root node's matched-SHOULD count is exactly the tally
+        # _scored_term_group filters on. Everything else (MUST_NOT/
+        # FILTER occurrences, fuzzy clauses, duplicate pairs — where
+        # the DataFrame fast path itself switches to the joins
+        # compiler) stays on the counting compiler.
         msm = node.min_should_match
+        terms = [(occ, _as_term(n)) for occ, n in node.clauses]
         if (
             msm < 0
             or node.boost != 1.0
-            or any(occ not in (MUST, SHOULD) for occ, _ in node.clauses)
+            or any(occ not in (MUST, SHOULD) or t is None
+                   for occ, t in terms)
+            or len({(t.field, t.term) for _, t in terms}) < len(terms)
         ):
             return None
-        term_clauses, seen = [], set()
-        for occ, n in node.clauses:
-            t = _as_term(n)
-            if t is None or t.boost <= 0 or t.field not in index.stats:
-                return None
-            pair = (t.field, t.term)
-            if pair in seen:
-                # duplicate pairs merge into one scan row and break
-                # the clause tally — the DataFrame fast path falls
-                # back to _scored_bool_joins for the same reason
-                return None
-            seen.add(pair)
-            term_clauses.append((occ, t))
-        n_shoulds = sum(1 for occ, _ in term_clauses if occ == SHOULD)
-        if msm > n_shoulds:
+        if msm > sum(1 for occ, _ in terms if occ == SHOULD):
             # more required matches than SHOULD clauses: nothing can
             # satisfy it (the DataFrame filter is empty too)
-            return (None, None, "empty", None)
-        if all(occ == SHOULD for occ, _ in term_clauses):
-            pairs = [(t.field, t.term) for _, t in term_clauses]
-            weights = {(t.field, t.term): t.boost
-                       for _, t in term_clauses}
-            if all(w == 1.0 for w in weights.values()):
-                weights = None
-            return (None, (pairs, msm), "or_msm", weights)
-        # mixed MUST/SHOULD: one singleton group per clause so the
-        # kernel's distinct-SHOULD-group count == the clause tally
-        groups = [
-            (occ, [(t.field, t.term, t.boost)])
-            for occ, t in term_clauses
-        ]
-        return (None, (groups, msm), "group_msm", None)
+            return _EMPTY_ROUTE
+        return _flat_route(index, terms, msm)
     # fuzzy clauses expand driver-side (memoized) into weighted OR
     # groups of terms, making booleans-with-fuzzy kernel-eligible;
     # a MUST fuzzy with no expansions short-circuits to an empty result
     rewritten = _expand_fuzzy_clauses(index, node)
     if rewritten is None:
-        return (None, None, "empty", None)
+        return _EMPTY_ROUTE
     if rewritten is not node:
         node = _flatten(rewritten)
         if not isinstance(node, BoolQ):
             return _wand_route(index, node)  # collapsed to one leaf
         if not node.clauses:
             return None
-    if node.boost != 1.0:
-        # the flat/group kernels assume an unboosted root; the tree
-        # kernel folds root boosts into its leaf weights
-        return _tree_route(index, node)
-    occs = {occ for occ, _ in node.clauses}
-    if len(occs) == 1 and next(iter(occs)) in (MUST, SHOULD):
-        # flat single-occurrence boolean -> the lean or/and kernel.
-        # Duplicate (field, term) pairs merge by SUMMING boosts — the
-        # same merge (and the same float addition order) as
-        # _scored_term_group, so the paths stay bit-identical.
-        pairs, weights = [], {}
-        ok = True
-        for _, n in node.clauses:
-            t = _as_term(n)
-            if t is None:
-                ok = False
-                break
-            pair = (t.field, t.term)
-            if pair not in weights:
-                pairs.append(pair)
-                weights[pair] = 0.0
-            weights[pair] += t.boost
-        if (
-            ok
-            and all(w > 0 for w in weights.values())
-            and all(f in index.stats for f, _ in pairs)
-        ):
-            occ = next(iter(occs))
-            if all(w == 1.0 for w in weights.values()):
-                weights = None
-            return (None, pairs, "and" if occ == MUST else "or", weights)
-    # one-level group trees ((a OR b) AND c NOT d) and mixed MUST/
-    # SHOULD flat booleans -> the group kernel, same eligibility rules
-    # as _scored_group_tree plus kernel-specific guards (positive
-    # scored boosts; phrase constituents may not share pairs with
-    # anything else). PhraseQ leaves are admitted too: the group
-    # kernel scores them in-scan from positions (mixed
-    # '"exact phrase" AND term' booleans stay on the scale path).
-    # Duplicate TERM pairs across clauses are kernel-eligible: each
-    # occurrence fans out from one block decode.
-    from lucene_clj_spark.wand import PhraseMember
+    terms = [(occ, _as_term(n)) for occ, n in node.clauses]
+    if node.boost == 1.0 and all(
+        occ in (MUST, SHOULD) and t is not None for occ, t in terms
+    ):
+        # the DataFrame fast path's shape (_scored_term_group): merge
+        # duplicates and fold in its canonical order
+        return _flat_route(index, terms)
+    return _tree_route(index, node)
 
-    gclauses = _group_tree_clauses(node, allow_phrase=True)
-    if gclauses is None:
-        # deeper nesting than one level -> the arbitrary-depth tree
-        # kernel (term + phrase leaves at any depth; fuzzy leaves
-        # expand into weighted term OR-groups — see _tree_route)
-        return _tree_route(index, node)
-    groups: list[tuple[str, list]] = []
-    term_pairs: set[tuple[str, str]] = set()
-    phrase_pairs: set[tuple[str, str]] = set()
-    not_pairs: set[tuple[str, str]] = set()
 
-    def as_member(c: Node, gboost: float):
-        t = _as_term(c)
-        if t is not None:
-            return (t.field, t.term, t.boost * gboost)
-        assert isinstance(c, PhraseQ)
-        return PhraseMember(c.field, tuple(c.terms), c.boost * gboost)
+def _spec_route(index, leaves: list, root):
+    """The 'tree' route for a kernel spec, or None (DataFrame
+    fallback) when a leaf's field is not indexed or the spec fails the
+    kernel's own input checks (wand.check_tree_spec)."""
+    from lucene_clj_spark.wand import check_tree_spec
 
-    for occ, child in gclauses:
-        if _as_term(child) is not None or isinstance(child, PhraseQ):
-            members = [as_member(child, 1.0)]
-        else:
-            members = [as_member(cc, child.boost) for _, cc in child.clauses]
-        for m in members:
-            if isinstance(m, PhraseMember):
-                if m.field not in index.stats:
-                    return None
-                if occ != "MUST_NOT" and m.boost <= 0:
-                    return None  # non-positive weight inverts bounds
-                pp = {(m.field, t_) for t_ in m.terms}
-                # a phrase constituent may not share a pair with any
-                # term clause or other phrase: the positions scan and
-                # the impacts scan would double-carry the same blocks
-                if pp & (term_pairs | phrase_pairs):
-                    return None
-                phrase_pairs |= pp
-            else:
-                f_, t_, b_ = m
-                if f_ not in index.stats:
-                    return None
-                if occ != "MUST_NOT" and b_ <= 0:
-                    return None  # non-positive weight inverts bounds
-                if (f_, t_) in phrase_pairs:
-                    return None  # collides with a phrase constituent
-                # duplicate TERM pairs across clauses are fine: the
-                # kernel fans each decoded block out per occurrence
-                term_pairs.add((f_, t_))
-                if occ == "MUST_NOT":
-                    not_pairs.add((f_, t_))
-        groups.append((occ, members))
-    if not_pairs:
-        # a pair with a MUST_NOT occurrence excludes every doc that
-        # matches it, so its SCORED occurrences can never contribute:
-        # drop them (Lucene-equivalent). A MUST group emptied by the
-        # drop can only be satisfied by excluded docs -> no results.
-        pruned: list[tuple[str, list]] = []
-        for occ, members in groups:
-            if occ == "MUST_NOT":
-                pruned.append((occ, members))
-                continue
-            kept = [
-                m for m in members
-                if isinstance(m, PhraseMember)
-                or (m[0], m[1]) not in not_pairs
-            ]
-            if not kept:
-                if occ == MUST:
-                    return (None, None, "empty", None)
-                continue  # fully-excluded SHOULD group drops out
-            pruned.append((occ, kept))
-        groups = pruned
-        if all(o == "MUST_NOT" for o, _ in groups):
-            return (None, None, "empty", None)
-    return (None, groups, "group", None)
+    if any(le.field not in index.stats for le in leaves):
+        return None
+    try:
+        check_tree_spec(leaves, root)
+    except ValidationError:
+        return None
+    return (None, (leaves, root), "tree", None)
+
+
+def _flat_route(index, term_clauses: list, msm: int = 0):
+    """The 'tree' route of a flat MUST/SHOULD boolean of TermQs — one
+    merged leaf per (field, term), sorted (wand.flat_spec)."""
+    from lucene_clj_spark.wand import flat_spec
+
+    return _spec_route(index, *flat_spec(
+        [(occ, t.field, t.term, t.boost) for occ, t in term_clauses], msm
+    ))
 
 
 def _tree_route(index, node: BoolQ):
-    """Kernel eligibility for ARBITRARY-DEPTH boolean trees: every
-    leaf a term or exact phrase on an indexed field, positive weights
-    on all scored leaves (non-positive weights would invert the
-    kernel's skip bounds — same guard as every other kernel shape),
-    and no (field, term) pair shared between a phrase constituent and
-    anything else (the positions scan and the impacts scan would
-    double-carry the same blocks — same guard as the group kernel).
-    Returns the ('tree', (leaves, root)) route or None to fall back."""
-    from lucene_clj_spark.wand import PhraseTreeLeaf
-
+    """Kernel eligibility for ARBITRARY-DEPTH boolean trees (one-level
+    group trees included): every leaf a term or exact phrase on an
+    indexed field, fuzzy leaves expanded into weighted term OR-groups,
+    and the spec passing the kernel's input checks. Returns the 'tree'
+    route or None to fall back."""
     spec = _bool_tree_spec(node, allow_phrase=True)
     if spec is None:
         # fuzzy leaves at depth expand into weighted term OR-groups
@@ -2421,26 +2298,7 @@ def _tree_route(index, node: BoolQ):
             spec = _bool_tree_spec(deep, allow_phrase=True)
     if spec is None:
         return None
-    leaves, root = spec
-    term_pairs: set[tuple[str, str]] = set()
-    phrase_pairs: set[tuple[str, str]] = set()
-    for le in leaves:
-        if le.field not in index.stats:
-            return None
-        if le.scored and le.weight <= 0:
-            # a non-positive closeness/boost weight would invert the
-            # kernel's skip bounds — fall back to the DataFrame path
-            return None
-        if isinstance(le, PhraseTreeLeaf):
-            pp = {(le.field, t_) for t_ in le.terms}
-            if pp & (term_pairs | phrase_pairs):
-                return None
-            phrase_pairs |= pp
-        else:
-            if (le.field, le.term) in phrase_pairs:
-                return None
-            term_pairs.add((le.field, le.term))
-    return (None, spec, "tree", None)
+    return _spec_route(index, *spec)
 
 
 def _validate_opts(results_per_page, page, search_after):
@@ -2488,19 +2346,18 @@ def search(
     Spark needs a declared schema where Clojure returned free-form
     maps. ``hit_columns`` prunes which stored columns reach the fn.
 
-    ``strategy``: 'auto' (default) routes eligible queries — term /
-    phrase / flat AND/OR booleans over ANY mix of fields, including
-    map queries {title: ..., body: ...} (boosts ride as kernel
-    weights) / fuzzy / term-like DisMaxQ (the group kernel with the
-    max + tie * rest combine) / SpanOrQ (the pooled-tf kernel,
-    wand.span_or_topk) on a segment-backed disk index, any
-    page, keyset pagination included for every kernel shape — through
-    the segment kernels
-    (block-max WAND for term sets, the positions-decoding phrase
-    kernel for phrases; result-identical, pinned by test — the
-    compressed-segment scan + bounded heaps are the 100 TB path);
-    'dataframe' always uses the exhaustive DataFrame plan; 'wand'
-    requires eligibility and raises otherwise."""
+    ``strategy``: 'auto' (default) routes eligible queries on a
+    segment-backed disk index through the segment kernels, any page,
+    keyset pagination included: every boolean-family shape — term,
+    flat AND/OR over ANY mix of fields (map queries
+    {title: ..., body: ...}), min_should_match, fuzzy, group and
+    nested trees with phrase leaves, term-like DisMaxQ — on the one
+    block-max tree kernel (boosts ride as kernel weights), and
+    phrases / spans on the positions-decoding kernels
+    (result-identical, pinned by test — the compressed-segment scan +
+    bounded heaps are the 100 TB path); 'dataframe' always uses the
+    exhaustive DataFrame plan; 'wand' requires eligibility and raises
+    otherwise."""
     if strategy not in ("auto", "dataframe", "wand"):
         raise ValidationError(
             "strategy must be 'auto', 'dataframe', or 'wand'",
@@ -2550,8 +2407,8 @@ def search(
     scores = None
     route = None
     # kernels serve any page by fetching k*(page+1) into the bounded
-    # heaps; search_after rides into EVERY kernel shape (term/bool/
-    # group/phrase/fuzzy) as a pre-heap keyset mask
+    # heaps; search_after rides into EVERY kernel shape as a pre-heap
+    # keyset mask
     kernel_k = results_per_page * ((page or 0) + 1)
     sa_key = None
     if search_after is not None:
@@ -2571,136 +2428,45 @@ def search(
             {},
         )
     if route is not None:
-        field_, terms_, mode_, weights_ = route
+        from lucene_clj_spark import wand
+
+        field_, payload, mode_, weight_ = route
+        kw = {"k": kernel_k, "search_after": sa_key}
         if mode_ == "empty":
             # route-time short-circuit (e.g. a MUST fuzzy clause with
             # zero dictionary expansions): the result is empty
             scores = _empty_scores(index)
-        elif mode_ == "and":
-            # a MUST term absent from the dictionary empties the result
-            # (the kernel would silently drop it instead)
-            st = _lookup_term_stats(index, terms_)
-            if len(st) < len(terms_):
-                scores = _empty_scores(index)
-        elif mode_ == "fuzzy":
-            # expand driver-side (memoized), then run the weighted-OR
-            # kernel with the closeness boosts as term weights
-            fnode = terms_
-            exp = _fuzzy_expansions(index, fnode)
-            if not exp:
-                scores = _empty_scores(index)
-            else:
-                terms_ = [(field_, t) for t, _, _ in exp]
-                weights_ = {
-                    (field_, t): fb * fnode.boost for t, _, fb in exp
-                }
-                mode_ = "or"
-                if any(w <= 0 for w in weights_.values()):
-                    # closeness boost 1 - edits/min(|q|,|t|) can be <= 0
-                    # for short terms; a non-positive weight inverts the
-                    # kernel's block-max upper bounds (pruning would
-                    # skip true top-k docs) — same hazard _wand_route
-                    # guards for term boosts (ADVICE r02). Fall back.
-                    if strategy == "wand":
-                        raise ValidationError(
-                            "strategy='wand' cannot run this fuzzy "
-                            "query: an expansion's closeness weight is "
-                            "non-positive (short query term), which "
-                            "would invert the kernel's skip bounds",
-                            {"weights": weights_},
-                        )
-                    route = None
-                    scores = None
-                    terms_ = None
-        if scores is None and route is not None:
-            from lucene_clj_spark.wand import (
-                phrase_topk,
-                wand_group_topk,
-                wand_pairs_topk,
-                wand_tree_topk,
+        elif mode_ == "tree":
+            # every boolean-family shape; absent leaves prune inside
+            scores = wand.wand_tree_topk(index, *payload, **kw)
+        elif mode_ == "phrase":
+            scores = wand.phrase_topk(index, field_, payload,
+                                      weight=weight_ or 1.0, **kw)
+        elif mode_ == "span_or":
+            scores = wand.span_or_topk(index, field_, payload,
+                                       boost=weight_, **kw)
+        elif mode_ == "sloppy_phrase":
+            scores = wand.sloppy_phrase_topk(
+                index, field_, list(payload.terms),
+                slop=int(payload.slop), weight=payload.boost, **kw,
             )
-
-            if mode_ == "phrase":
-                scores = phrase_topk(index, field_, terms_, k=kernel_k,
-                                     search_after=sa_key,
-                                     weight=weights_ or 1.0)
-            elif mode_ == "sloppy_phrase":
-                from lucene_clj_spark.wand import sloppy_phrase_topk
-
-                n_ = terms_
-                scores = sloppy_phrase_topk(
-                    index, field_, list(n_.terms), slop=int(n_.slop),
-                    k=kernel_k, search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "group":
-                # absent MUST members / pure-negative trees are handled
-                # inside wand_group_topk (empty result)
-                scores = wand_group_topk(
-                    index, terms_, k=kernel_k, search_after=sa_key
-                )
-            elif mode_ == "dismax":
-                groups_, tie_ = terms_
-                scores = wand_group_topk(
-                    index, groups_, k=kernel_k, search_after=sa_key,
-                    dismax_tie=tie_,
-                )
-            elif mode_ == "tree":
-                # arbitrary-depth trees; absent leaves prune inside
-                leaves_, root_ = terms_
-                scores = wand_tree_topk(
-                    index, leaves_, root_, k=kernel_k,
-                    search_after=sa_key,
-                )
-            elif mode_ == "span_or":
-                from lucene_clj_spark.wand import span_or_topk
-
-                scores = span_or_topk(
-                    index, field_, terms_, k=kernel_k,
-                    boost=weights_, search_after=sa_key,
-                )
-            elif mode_ == "span_near":
-                from lucene_clj_spark.wand import span_near_topk
-
-                n_ = terms_
-                scores = span_near_topk(
-                    index, field_, list(n_.terms), slop=int(n_.slop),
-                    in_order=bool(n_.in_order), k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "span_first":
-                from lucene_clj_spark.wand import span_first_topk
-
-                n_ = terms_
-                scores = span_first_topk(
-                    index, field_, n_.term, n_.end, k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "span_not":
-                from lucene_clj_spark.wand import span_not_topk
-
-                n_ = terms_
-                scores = span_not_topk(
-                    index, field_, n_.include, n_.exclude,
-                    pre=n_.pre, post=n_.post, k=kernel_k,
-                    search_after=sa_key, weight=n_.boost,
-                )
-            elif mode_ == "or_msm":
-                pairs_, msm_ = terms_
-                scores = wand_pairs_topk(
-                    index, pairs_, k=kernel_k, mode="or",
-                    weights=weights_, msm=msm_, search_after=sa_key,
-                )
-            elif mode_ == "group_msm":
-                groups_, msm_ = terms_
-                scores = wand_group_topk(
-                    index, groups_, k=kernel_k, search_after=sa_key,
-                    msm=msm_,
-                )
-            else:
-                scores = wand_pairs_topk(
-                    index, terms_, k=kernel_k, mode=mode_,
-                    weights=weights_, search_after=sa_key,
-                )
+        elif mode_ == "span_near":
+            scores = wand.span_near_topk(
+                index, field_, list(payload.terms),
+                slop=int(payload.slop), in_order=bool(payload.in_order),
+                weight=payload.boost, **kw,
+            )
+        elif mode_ == "span_first":
+            scores = wand.span_first_topk(
+                index, field_, payload.term, payload.end,
+                weight=payload.boost, **kw,
+            )
+        elif mode_ == "span_not":
+            scores = wand.span_not_topk(
+                index, field_, payload.include, payload.exclude,
+                pre=payload.pre, post=payload.post,
+                weight=payload.boost, **kw,
+            )
     if scores is None:
         scores = compile_node(index, ast)
 

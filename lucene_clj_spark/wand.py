@@ -1,6 +1,6 @@
 """Block-max WAND top-k over compressed segments.
 
-The scale-path query kernel (north_star: "BM25 top-k retrieval using
+The scale-path query kernels (north_star: "BM25 top-k retrieval using
 block-max WAND posting-list intersection and a bounded min-heap"):
 
 - Term selection prunes at THREE levels before any decode: parquet
@@ -19,22 +19,30 @@ block-max WAND posting-list intersection and a bounded min-heap"):
   for a doc interval in the same partition IN CHUNK ORDER, so scoring
   is partition-local (one narrow shuffle of compressed blocks, no
   row-level shuffle ever).
-- Inside each partition the kernel STREAMS Arrow batches chunk by
-  chunk (doc-order traversal): a chunk whose upper bound (sum over
-  query keys of its max block bound) can't beat the bounded min-heap's
-  θ is dropped without decoding; within a surviving chunk, per-block
-  upper bounds skip individual blocks, and the actually-decoded blocks
-  are scored fully vectorized (numpy varint decode + LUT norms). Peak
-  kernel memory is ONE chunk's blocks — not the partition — so the
-  per-task footprint is set by chunk_span, independent of partition
-  size (VERDICT r02 item 5).
+- Inside each partition a kernel STREAMS Arrow batches chunk by chunk
+  (doc-order traversal): a chunk whose upper bound can't beat the
+  bounded min-heap's θ is dropped without decoding; within a surviving
+  chunk, per-block upper bounds skip individual blocks, and the
+  actually-decoded blocks are scored fully vectorized (numpy varint
+  decode + LUT norms). Peak kernel memory is ONE chunk's blocks — not
+  the partition — so the per-task footprint is set by chunk_span,
+  independent of partition size.
 - Partitions emit their local top-k; the driver-side
   ``orderBy(...).limit(k)`` (TakeOrderedAndProject) merges heaps.
 
-Queries may span MULTIPLE fields: every posting stream is keyed by
-``fkey = field || '\\x1f' || term`` with its own idf and its field's
+ONE boolean kernel serves every boolean-family shape: a term, flat
+AND/OR over any mix of fields, min_should_match, fuzzy expansions,
+group and arbitrarily nested trees with phrase leaves, and term-like
+DisjunctionMaxQuery all compile to a ``(leaves, root)`` spec
+(TreeLeaf / PhraseTreeLeaf + TreeNode) executed by ``wand_tree_topk``
+— the segment twin of the reference's single BooleanQuery compile.
+``wand_topk`` and ``wand_pairs_topk`` are thin wrappers that build a
+flat spec (``flat_spec``). Posting streams are keyed by
+``fkey = field || '\\x1f' || term`` with their own idf and field
 norm-denominator cache, so a map query {title: ..., body: ...} runs in
-the SAME one-pass kernel (chunk = doc range is field-independent).
+the same one-pass kernel (chunk = doc range is field-independent). The
+positional shapes (phrase, sloppy phrase, span near/first/not/or) have
+their own kernels over the same scan.
 
 Scores are computed with the same double-precision formula as the
 DataFrame path (bm25.score_col), so the two execution strategies are
@@ -53,20 +61,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lucene_clj_spark import bm25, codec
+from lucene_clj_spark.errors import ValidationError
 from lucene_clj_spark.spans import _sloppy_freq_py, _span_near_ordered_freq
 
 _EMPTY = {"doc_id": "int64", "score": "float64"}
-
-
-class PhraseMember(NamedTuple):
-    """A phrase leaf inside a boolean group tree, carried into the
-    group kernel: scored in-scan from the positions streams with
-    weight ``boost`` folded into its idf_sum (same association as the
-    standalone phrase kernel / DataFrame path)."""
-
-    field: str
-    terms: tuple
-    boost: float
 
 
 class TreeLeaf(NamedTuple):
@@ -109,11 +107,21 @@ class TreeNode(NamedTuple):
     — at least one ``shoulds`` child matches; its score is the sum of
     the musts' scores plus the matching shoulds' scores (boosts are
     pre-folded into the leaves). A node with neither musts nor shoulds
-    (empty or pure-negative) matches nothing."""
+    (empty or pure-negative) matches nothing.
+
+    ``msm`` (minimumNumberShouldMatch) additionally requires at least
+    that many matching ``shoulds`` children. ``tie`` switches the
+    score to DisjunctionMaxQuery's ``max + tie * (sum - max)`` over
+    the matching shoulds (``max`` alone at tie 0; the node carries no
+    musts); ``None`` is the plain boolean sum. Both only ever lower a
+    score or drop a match, so the kernel's sum bounds stay sound for
+    0 <= tie <= 1."""
 
     musts: tuple
     shoulds: tuple
     nots: tuple
+    msm: int = 0
+    tie: float | None = None
 
 
 def _excluded_ids(index) -> np.ndarray | None:
@@ -181,13 +189,8 @@ def tree_possible(node, present) -> bool:
         return node in present
     if not all(tree_possible(m, present) for m in node.musts):
         return False
-    return bool(node.musts) or any(
-        tree_possible(s, present) for s in node.shoulds
-    )
-
-
-def _empty_frame() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY)
+    need = node.msm or (0 if node.musts else 1)
+    return sum(tree_possible(s, present) for s in node.shoulds) >= need
 
 
 def _heap_frame(heap) -> pd.DataFrame:
@@ -229,151 +232,6 @@ def _stream_chunks(batches: Iterator[pd.DataFrame], process) -> None:
                 if len(buf) > 1 else buf[0])
 
 
-def _kernel_factory(key_idfs: dict, key_ws: dict, key_denoms: dict,
-                    k: int, mode: str,
-                    search_after: tuple[float, int] | None = None,
-                    excluded: np.ndarray | None = None,
-                    pool_widf: float | None = None,
-                    msm: int = 0):
-    """Per-partition streaming WAND kernel for mapInPandas.
-
-    ``key_idfs`` maps fkey -> idf and ``key_ws`` -> its boost weight,
-    applied LAST (w * ((idf*tf)/denom)) to match the DataFrame path's
-    ``boost * score_col`` association bit-for-bit. Scores and every
-    block/chunk upper bound scale linearly in the weight (the scan
-    already folds it into ``block_max_score`` with the same
-    association), so the skip logic stays exact. ``key_denoms`` maps
-    fkey -> the field's norm-denominator cache (multi-field queries
-    carry per-field avgdl).
-
-    ``search_after`` = (score, doc_id) applies the keyset predicate
-    ``score < s OR (score == s AND doc_id > d)`` BEFORE heap insert —
-    the kernel-side equivalent of filtering before top-k. Block-max
-    skipping stays exact: the keyset only removes HIGH scorers, and a
-    skipped block still can't contain any doc able to beat θ."""
-    n_keys = len(key_idfs)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            if mode == "and" and cpdf["fkey"].nunique() < n_keys:
-                return
-            # CANONICAL row order: the per-doc score sum (np.add.at
-            # below) adds in concatenation order, and the raw chunk
-            # frame's row order varies with file/batch layout — which
-            # made IDENTICAL docs in different chunks differ by 1 ulp
-            # (surfaced by the sf1 duplication run: tie sets under
-            # 320-way duplication came out chunk-dependent). Stable
-            # fkey sort == (field, term) ascending, every chunk, every
-            # layout.
-            cpdf = cpdf.sort_values("fkey", kind="stable",
-                                    ignore_index=True)
-            # per-key chunk maxima ONCE: the chunk bound is their sum;
-            # a block's skip bound is its own max + the OTHER keys' sums
-            key_maxes = cpdf.groupby("fkey")["block_max_score"].max()
-            tm_sum = float(key_maxes.sum())
-            # STRICT bound: a doc scoring exactly theta can still win
-            # the (score desc, doc_id asc) tiebreak against the current
-            # heap minimum, so ties must be decoded, not skipped
-            if len(heap) >= k and tm_sum < theta():
-                return
-            if mode == "pool":
-                # SpanOr pooled-tf scoring: accumulate RAW tfs + the
-                # per-doc norm byte, then saturate ONCE with the
-                # summed idf (pool_widf = boost * idf_sum). The
-                # per-row/chunk skip bounds are valid because BM25 is
-                # subadditive in tf — widf*f(sum tf_i) <= sum over
-                # terms of widf*f(tf_i) — and span_or_topk folds widf
-                # into every term's block bound (see its docstring
-                # for the 1e-12 soundness inflation).
-                doc_parts, tf_parts, norm_parts = [], [], []
-                for row in cpdf.itertuples(index=False):
-                    others = tm_sum - float(key_maxes[row.fkey])
-                    if (
-                        len(heap) >= k
-                        and row.block_max_score + others < theta()
-                    ):
-                        continue
-                    doc_parts.append(codec.delta_decode(
-                        codec.decode_block(row.doc_deltas)
-                    ))
-                    tf_parts.append(
-                        codec.decode_block(row.tfs).astype(np.float64)
-                    )
-                    norm_parts.append(
-                        np.frombuffer(row.norms, dtype=np.uint8)
-                    )
-                if not doc_parts:
-                    return
-                docs = np.concatenate(doc_parts)
-                tfs_all = np.concatenate(tf_parts)
-                norms_all = np.concatenate(norm_parts)
-                uniq, inv = np.unique(docs, return_inverse=True)
-                tf_agg = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(tf_agg, inv, tfs_all)
-                # same doc => same field dl => same norm byte; last
-                # write wins over identical values
-                norm_agg = np.zeros(uniq.size, dtype=np.uint8)
-                norm_agg[inv] = norms_all
-                denom = next(iter(key_denoms.values()))
-                agg = pool_widf * tf_agg / (tf_agg + denom[norm_agg])
-                _push_topk(heap, k, uniq, agg, search_after, excluded)
-                return
-            doc_parts, score_parts = [], []
-            for row in cpdf.itertuples(index=False):
-                others = tm_sum - float(key_maxes[row.fkey])
-                if (
-                    len(heap) >= k
-                    and row.block_max_score + others < theta()
-                ):
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                tfs = codec.decode_block(row.tfs).astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)
-                idf = key_idfs[row.fkey]
-                denom = key_denoms[row.fkey]
-                scores = key_ws[row.fkey] * (
-                    idf * tfs / (tfs + denom[norms])
-                )
-                doc_parts.append(ids)
-                score_parts.append(scores)
-            if not doc_parts:
-                return
-            docs = np.concatenate(doc_parts)
-            scores = np.concatenate(score_parts)
-            uniq, inv, counts = np.unique(
-                docs, return_inverse=True, return_counts=True
-            )
-            agg = np.zeros(uniq.size, dtype=np.float64)
-            np.add.at(agg, inv, scores)
-            if mode == "and":
-                keep = counts >= n_keys
-                uniq, agg = uniq[keep], agg[keep]
-            elif msm:
-                # minimumNumberShouldMatch over an all-SHOULD flat
-                # boolean: counts = matched DISTINCT pairs per doc
-                # (each block decodes once per pair — the router
-                # guarantees distinct clause pairs, matching the
-                # DataFrame tally's contract). Sound under block
-                # skipping for the same reason 'and' is: a doc inside
-                # any skipped block can't beat theta, so an undercount
-                # only ever drops docs already out of the top-k.
-                keep = counts >= msm
-                uniq, agg = uniq[keep], agg[keep]
-            _push_topk(heap, k, uniq, agg, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
-
-
 def _segment_scan(index, pairs: list[tuple[str, str]],
                   weights: dict | None = None,
                   unbounded_keys: set | None = None,
@@ -387,19 +245,17 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
     order matched to the kernel's numpy scoring, so the bound is the
     exact max block score.
 
-    ``weights`` maps (field, term) -> boost; folded into the idfs (and
-    therefore the bounds) so pruning stays exact under boosts.
+    ``weights`` maps (field, term) -> boost (1.0 default), folded into
+    the scan-time block bound only (span_or_topk's bound weights).
 
-    Returns (key_idfs, key_ws, blocks); keys are
-    ``field + '\\x1f' + term``, key_idfs the unweighted idfs, key_ws
-    the boost weights (1.0 default). Absent terms are missing from
+    Returns (key_idfs, blocks); keys are ``field + '\\x1f' + term``,
+    key_idfs the unweighted idfs. Absent terms are missing from
     key_idfs; blocks is None if no term is present. ``unbounded_keys``
     marks fkeys whose block bound is never consulted (MUST_NOT
     exclusion keys): their bound column is a constant instead of the
     per-block impacts fold."""
     import os
 
-    from lucene_clj_spark.errors import ValidationError
     from lucene_clj_spark.segments import (
         SEGMENT_FORMAT,
         missing_buckets,
@@ -501,7 +357,7 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
         # idfs_only: the caller needs the (memoized) idf resolution to
         # derive bound weights before the real scan — skip bucket
         # resolution and the blocks plan (span_or_topk's first pass)
-        return key_idfs, key_ws, None
+        return key_idfs, None
     present_terms = sorted(
         {k.split("\x1f", 1)[1] for k in key_idfs}
     )
@@ -588,7 +444,7 @@ def _segment_scan(index, pairs: list[tuple[str, str]],
             ),
         )
     )
-    return key_idfs, key_ws, blocks
+    return key_idfs, blocks
 
 
 def _gated(gate, expr):
@@ -614,15 +470,13 @@ def _key_denoms(index, key_idfs: dict) -> dict:
     return out
 
 
-def _phrase_spec(index, field: str, terms: tuple, weight: float,
-                 p_idfs: dict) -> dict:
-    """Shared phrase-member spec for the group/tree kernels: offset
-    map (repeated terms fold into one stream with several offsets),
-    constituent idfs, the boost-weighted idf_sum (weight folded with
-    the standalone phrase kernel's association), and the field's
-    norm-denominator cache. The caller adds its own identity keys
-    (gid/is_not for the group kernel, lid/scored for the tree
-    kernel)."""
+def _phrase_spec(index, le: PhraseTreeLeaf, p_idfs: dict) -> dict:
+    """A phrase leaf's spec for the tree kernel: offset map (repeated
+    terms fold into one stream with several offsets), constituent
+    idfs, the weighted idf_sum (weight folded with the standalone
+    phrase kernel's association), the field's norm-denominator cache
+    and the leaf's identity (lid, scored)."""
+    field, terms, weight = le.field, le.terms, le.weight
     offsets: dict[str, list[int]] = {}
     for i, t_ in enumerate(terms):
         offsets.setdefault(t_, []).append(i)
@@ -637,6 +491,8 @@ def _phrase_spec(index, field: str, terms: tuple, weight: float,
         "fkeys": {f"{field}\x1f{t_}" for t_ in offsets},
         "idf_sum": idf_sum,
         "denom": _denom_cache(float(index.field_stats(field)["avgdl"])),
+        "lid": le.lid,
+        "scored": le.scored,
     }
 
 
@@ -862,7 +718,7 @@ def _eval_phrase_chunk(
     return ids_a, scores
 
 
-def _phrase_kernel_factory(
+def _make_phrase_kernel(
     offsets: dict, term_idfs: dict, idf_sum: float, avgdl: float, k: int,
     search_after: tuple[float, int] | None = None,
     excluded: np.ndarray | None = None,
@@ -929,7 +785,7 @@ def phrase_topk(
     offsets: dict[str, list[int]] = {}
     for i, t in enumerate(terms):
         offsets.setdefault(t, []).append(i)
-    key_idfs, _ws, blocks = _segment_scan(
+    key_idfs, blocks = _segment_scan(
         index, [(field, t) for t in offsets]
     )
     if blocks is None or len(key_idfs) < len(offsets):
@@ -950,9 +806,9 @@ def phrase_topk(
          "norms", "positions"],
         npart,
     )
-    kernel = _phrase_kernel_factory(offsets, term_idfs, idf_sum, avgdl, k,
-                                    search_after=search_after,
-                                    excluded=_excluded_ids(index))
+    kernel = _make_phrase_kernel(offsets, term_idfs, idf_sum, avgdl, k,
+                                 search_after=search_after,
+                                 excluded=_excluded_ids(index))
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1062,12 +918,18 @@ def span_near_topk(
     prune a true top-k doc (same insurance as span_or_topk). Chunks
     missing ANY clause term are skipped without decoding — the
     conjunction semantics make this the dominant pruning at scale."""
+    terms = list(terms)
+    if len(set(terms)) != len(terms):
+        raise ValidationError(
+            "span_near with repeated terms is not supported (the "
+            "repeat-group matcher variant); use distinct terms",
+            {"terms": terms},
+        )
     if weight <= 0:
         raise ValueError("span_near kernel weight must be positive "
                          "(non-positive weights invert the skip bounds)")
-    terms = list(terms)
     pairs = [(field, t) for t in terms]
-    key_idfs, _ws, blocks = _segment_scan(index, pairs)
+    key_idfs, blocks = _segment_scan(index, pairs)
     if blocks is None or len(key_idfs) < len(terms):
         # any clause term absent from the dictionary -> no match
         return index.spark.createDataFrame([], "doc_id long, score double")
@@ -1080,7 +942,6 @@ def span_near_topk(
         idf_sum += term_idfs[t]
     w_idf_sum = float(weight) * idf_sum if weight != 1.0 else idf_sum
     avgdl = float(index.field_stats(field)["avgdl"])
-    uniq_terms = list(dict.fromkeys(terms))
     slop_i, in_o = int(slop), bool(in_order)
     first_t = terms[0]
     excluded = _excluded_ids(index)
@@ -1095,13 +956,13 @@ def span_near_topk(
         def process(cpdf: pd.DataFrame) -> None:
             tmax = cpdf.groupby("term")["block_max_score"].max()
             # chunks missing any clause term can't match at all
-            if not all(t in tmax.index for t in uniq_terms):
+            if not all(t in tmax.index for t in terms):
                 return
             if in_o:
                 ratio = float(tmax[first_t]) / term_idfs[first_t]
             else:
                 ratio = sum(
-                    float(tmax[t]) / term_idfs[t] for t in uniq_terms
+                    float(tmax[t]) / term_idfs[t] for t in terms
                 )
             upper = w_idf_sum * min(1.0, ratio) * (1.0 + 1e-12)
             if len(heap) >= k and upper < theta():
@@ -1154,12 +1015,19 @@ def sloppy_phrase_topk(
     ``chunk_max/idf`` fold can never prune a true top-k doc. Chunks
     missing ANY phrase term skip without decoding (conjunction
     semantics — the dominant pruning at scale)."""
+    terms = list(terms)
+    if len(set(terms)) != len(terms):
+        raise ValidationError(
+            "sloppy phrases with repeated terms are not supported "
+            "(Lucene's repeat-group matcher variant); use slop=0 or "
+            "distinct terms",
+            {"terms": terms, "slop": slop},
+        )
     if weight <= 0:
         raise ValueError("sloppy-phrase kernel weight must be positive "
                          "(non-positive weights invert the skip bounds)")
-    terms = list(terms)
     pairs = [(field, t) for t in terms]
-    key_idfs, _ws, blocks = _segment_scan(index, pairs)
+    key_idfs, blocks = _segment_scan(index, pairs)
     if blocks is None or len(key_idfs) < len(terms):
         # any phrase term absent from the dictionary -> no match
         return index.spark.createDataFrame([], "doc_id long, score double")
@@ -1173,7 +1041,6 @@ def sloppy_phrase_topk(
         idf_sum += term_idfs[t]
     w_idf_sum = float(weight) * idf_sum if weight != 1.0 else idf_sum
     avgdl = float(index.field_stats(field)["avgdl"])
-    uniq_terms = list(dict.fromkeys(terms))
     slop_i = int(slop)
     excluded = _excluded_ids(index)
 
@@ -1187,10 +1054,10 @@ def sloppy_phrase_topk(
         def process(cpdf: pd.DataFrame) -> None:
             tmax = cpdf.groupby("term")["block_max_score"].max()
             # chunks missing any phrase term can't match at all
-            if not all(t in tmax.index for t in uniq_terms):
+            if not all(t in tmax.index for t in terms):
                 return
             ratio = sum(
-                float(tmax[t]) / term_idfs[t] for t in uniq_terms
+                float(tmax[t]) / term_idfs[t] for t in terms
             )
             upper = w_idf_sum * min(1.0, ratio) * (1.0 + 1e-12)
             if len(heap) >= k and upper < theta():
@@ -1237,7 +1104,7 @@ def span_first_topk(
     if weight <= 0:
         raise ValueError("span_first kernel weight must be positive "
                          "(non-positive weights invert the skip bounds)")
-    key_idfs, _ws, blocks = _segment_scan(index, [(field, term)])
+    key_idfs, blocks = _segment_scan(index, [(field, term)])
     if blocks is None or not key_idfs or end <= 0:
         return index.spark.createDataFrame([], "doc_id long, score double")
     idf = key_idfs[f"{field}\x1f{term}"]
@@ -1322,7 +1189,7 @@ def span_not_topk(
                          "(non-positive weights invert the skip bounds)")
     exc_key = f"{field}\x1f{exclude}"
     inc_key = f"{field}\x1f{include}"
-    key_idfs, _ws, blocks = _segment_scan(
+    key_idfs, blocks = _segment_scan(
         index, [(field, include), (field, exclude)],
         unbounded_keys={exc_key},
     )
@@ -1407,6 +1274,27 @@ def span_not_topk(
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def flat_spec(clauses: list, msm: int = 0) -> tuple[list, TreeNode]:
+    """The ``(leaves, root)`` spec of a FLAT boolean of term clauses
+    ``[(occ, field, term, weight), ...]`` with occ 'MUST' or 'SHOULD'.
+    Duplicate (field, term) pairs merge into one leaf by summing their
+    weights in clause order (MUST if any occurrence is) — the merge
+    search._scored_term_group makes. Leaves are listed sorted by
+    (field, term), so the tree kernel's per-node fold adds the leaf
+    scores in that plan's canonical order and the two strategies stay
+    bit-identical."""
+    merged: dict[tuple[str, str], list] = {}
+    for occ, f_, t_, w in clauses:
+        m = merged.setdefault((f_, t_), [0.0, False])
+        m[0] += w
+        m[1] = m[1] or occ == "MUST"
+    leaves, musts, shoulds = [], [], []
+    for lid, ((f_, t_), (w, must)) in enumerate(sorted(merged.items())):
+        leaves.append(TreeLeaf(lid, f_, t_, w, True))
+        (musts if must else shoulds).append(lid)
+    return leaves, TreeNode(tuple(musts), tuple(shoulds), (), msm)
+
+
 def wand_pairs_topk(
     index,
     pairs: list[tuple[str, str]],
@@ -1418,31 +1306,23 @@ def wand_pairs_topk(
     msm: int = 0,
 ) -> DataFrame:
     """Top-k (doc_id, score) for a (field, term) set — possibly
-    spanning SEVERAL fields — over the compressed segments, via the
-    streaming block-max kernel. ``mode`` = 'or' (SHOULD sum) or 'and'
-    (MUST intersection, scores summed). ``weights`` maps
-    (field, term) -> boost: scores and skip bounds both scale linearly,
-    so pruning stays exact. ``msm`` (mode='or' only) keeps docs
-    matching at least that many distinct pairs —
-    minimumNumberShouldMatch for all-SHOULD flat booleans, the same
-    matched-pair tally search._scored_term_group filters on."""
-    key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
-    if blocks is None:
-        return index.spark.createDataFrame([], "doc_id long, score double")
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
-    co = _co_located(
-        blocks,
-        ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
-        npart,
+    spanning SEVERAL fields — on the tree kernel. ``mode`` = 'or'
+    (SHOULD sum) or 'and' (MUST intersection, scores summed).
+    ``weights`` maps (field, term) -> boost (default 1.0); repeated
+    pairs count once. ``msm`` keeps docs matching at least that many
+    SHOULD pairs (minimumNumberShouldMatch)."""
+    if mode not in ("or", "and"):
+        raise ValidationError("mode must be 'or' or 'and'", {"mode": mode})
+    occ = "MUST" if mode == "and" else "SHOULD"
+    weights = weights or {}
+    leaves, root = flat_spec(
+        [(occ, f_, t_, float(weights.get((f_, t_), 1.0)))
+         for f_, t_ in dict.fromkeys(pairs)],
+        msm,
     )
-    kernel = _kernel_factory(
-        key_idfs, key_ws, _key_denoms(index, key_idfs), k, mode,
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        msm=msm,
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return wand_tree_topk(index, leaves, root, k=k,
+                          n_partitions=n_partitions,
+                          search_after=search_after)
 
 
 def wand_topk(
@@ -1498,7 +1378,7 @@ def span_or_topk(
         raise ValueError("span_or kernel requires boost > 0 (a "
                          "non-positive weight inverts the skip bounds)")
     pairs = [(field, t) for t in dict.fromkeys(terms)]
-    key_idfs0, _, _ = _segment_scan(index, pairs, idfs_only=True)
+    key_idfs0, _ = _segment_scan(index, pairs, idfs_only=True)
     if not key_idfs0:
         return index.spark.createDataFrame([], "doc_id long, score double")
     # idf_sum in ORIGINAL clause order — the DataFrame path sums its
@@ -1515,24 +1395,100 @@ def span_or_topk(
         for f_, t_ in pairs
         if f"{f_}\x1f{t_}" in key_idfs0
     }
-    key_idfs, key_ws, blocks = _segment_scan(index, pairs, weights)
+    _, blocks = _segment_scan(index, pairs, weights)
+    denom = _denom_cache(float(index.field_stats(field)["avgdl"]))
+    excluded = _excluded_ids(index)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        heap: list[tuple[float, int]] = []
+
+        def theta() -> float:
+            return heap[0][0] if len(heap) >= k else -math.inf
+
+        def process(cpdf: pd.DataFrame) -> None:
+            # per-key chunk maxima ONCE: the chunk bound is their sum;
+            # a block's skip bound is its own max + the OTHER keys'.
+            # STRICT comparisons: a doc scoring exactly θ can still win
+            # the doc_id tiebreak, so ties are decoded, not skipped
+            key_maxes = cpdf.groupby("fkey")["block_max_score"].max()
+            tm_sum = float(key_maxes.sum())
+            if len(heap) >= k and tm_sum < theta():
+                return
+            doc_parts, tf_parts, norm_parts = [], [], []
+            for row in cpdf.itertuples(index=False):
+                others = tm_sum - float(key_maxes[row.fkey])
+                if (
+                    len(heap) >= k
+                    and row.block_max_score + others < theta()
+                ):
+                    continue
+                doc_parts.append(codec.delta_decode(
+                    codec.decode_block(row.doc_deltas)
+                ))
+                tf_parts.append(
+                    codec.decode_block(row.tfs).astype(np.float64)
+                )
+                norm_parts.append(np.frombuffer(row.norms, dtype=np.uint8))
+            if not doc_parts:
+                return
+            # accumulate RAW tfs per doc (integer-valued, so the sum is
+            # exact in any order), then saturate ONCE with widf
+            uniq, inv = np.unique(np.concatenate(doc_parts),
+                                  return_inverse=True)
+            tf_agg = np.zeros(uniq.size, dtype=np.float64)
+            np.add.at(tf_agg, inv, np.concatenate(tf_parts))
+            # same doc => same field dl => same norm byte; last write
+            # wins over identical values
+            norm_agg = np.zeros(uniq.size, dtype=np.uint8)
+            norm_agg[inv] = np.concatenate(norm_parts)
+            agg = widf * tf_agg / (tf_agg + denom[norm_agg])
+            _push_topk(heap, k, uniq, agg, search_after, excluded)
+
+        _stream_chunks(batches, process)
+        yield _heap_frame(heap)
+
     npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(
         blocks,
         ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs", "norms"],
         npart,
     )
-    kernel = _kernel_factory(
-        key_idfs, key_ws, _key_denoms(index, key_idfs), k, "pool",
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        pool_widf=widf,
-    )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-def _tree_kernel_factory(
+def _first_lid(node) -> float:
+    """The smallest leaf lid under ``node`` (inf for an empty node)."""
+    if isinstance(node, int):
+        return node
+    return min(
+        (_first_lid(c) for c in node.musts + node.shoulds + node.nots),
+        default=math.inf,
+    )
+
+
+def _fold_orders(root) -> dict:
+    """id(node) -> the node's MUST and SHOULD children as
+    ``(child, is_must)`` in ascending first-lid order: the tree
+    kernel's per-node score fold order."""
+    out: dict[int, list] = {}
+
+    def walk(node) -> None:
+        if isinstance(node, int):
+            return
+        out[id(node)] = sorted(
+            [(c, True) for c in node.musts]
+            + [(c, False) for c in node.shoulds],
+            key=lambda cm: _first_lid(cm[0]),
+        )
+        for c in node.musts + node.shoulds + node.nots:
+            walk(c)
+
+    walk(root)
+    return out
+
+
+def _make_tree_kernel(
     key_idfs: dict,
     key_denoms: dict,
     occs: dict,
@@ -1562,9 +1518,11 @@ def _tree_kernel_factory(
     Because the bound is LINEAR in the leaf maxima, a block b of fkey
     F bounds docs it contains by ``ub - cw[F]*(chunk_max[F] -
     block_max[b])`` with cw[F] the summed countable weight of F —
-    skipping on that bound below θ is exact, and dropping the skipped
-    block's match flags is sound by the same argument as the group
-    kernel (any such doc's total is below θ).
+    skipping on that bound below θ is exact. Dropping the skipped
+    block's match flags is sound too: away from MUST_NOT edges every
+    node's match and score are monotone in its children's (msm and a
+    tie <= 1 included), so a doc of that block can only lose score or
+    its match — and its true total is already below θ.
 
     Keys in ``never_skip`` carry at least one match-only occurrence
     (a MUST_NOT edge somewhere on a root path): missing one of their
@@ -1582,11 +1540,18 @@ def _tree_kernel_factory(
     bound as a per-chunk CONSTANT (term-block skipping subtracts only
     term-key deltas, so the phrase part stays an upper bound), and
     phrase constituent blocks are never block-skipped. Match-only
-    phrases contribute nothing to bounds and evaluate ids-only."""
+    phrases contribute nothing to bounds and evaluate ids-only.
+
+    Fold order: a node adds its MUST and SHOULD children's scores in
+    ascending first-lid order, MUST and SHOULD interleaved, an
+    unmatched SHOULD adding 0.0. For a flat_spec that is the sorted
+    (field, term) order of search._scored_term_group's canonical fold;
+    for a parsed tree it is clause order."""
     phrases = phrases or []
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
+        folds = _fold_orders(root)  # keyed by this process's nodes
 
         def theta() -> float:
             return heap[0][0] if len(heap) >= k else -math.inf
@@ -1647,7 +1612,8 @@ def _tree_kernel_factory(
                 if not p["scored"] or p["lid"] not in phrase_countable:
                     continue
                 ub += _phrase_chunk_bound(p, rows_)
-            # STRICT bound (ties must be decoded) — see _kernel_factory
+            # STRICT bound: a doc scoring exactly θ can still win the
+            # (score desc, doc_id asc) tiebreak, so ties are decoded
             if len(heap) >= k and ub < theta():
                 return
             per_fkey: dict[str, list] = {}
@@ -1750,28 +1716,35 @@ def _tree_kernel_factory(
             zero_m = np.zeros(n, dtype=bool)
 
             def ev(node):
-                """(matched bool[n], score float64[n]) — child order
-                and left-assoc adds mirror search._scored_tree's
-                Column expression exactly."""
+                """(matched bool[n], score float64[n]) — children fold
+                in the node's fold order (see the factory docstring)."""
                 if isinstance(node, int):
                     m = matched.get(node)
                     if m is None:
                         return zero_m, zero_s
                     return m, scores.get(node, zero_s)
-                m_acc = None
-                s_acc = None
-                for mch in node.musts:
-                    cm, cs = ev(mch)
-                    m_acc = cm if m_acc is None else (m_acc & cm)
+                m_acc = s_acc = any_s = n_s = mx = None
+                for ch, is_must in folds[id(node)]:
+                    cm, cs = ev(ch)
+                    if is_must:
+                        m_acc = cm if m_acc is None else (m_acc & cm)
+                    else:
+                        any_s = cm if any_s is None else (any_s | cm)
+                        cs = np.where(cm, cs, 0.0)
+                        if node.msm:
+                            n_s = (cm.astype(np.int64) if n_s is None
+                                   else n_s + cm)
+                        if node.tie is not None:
+                            mx = cs if mx is None else np.maximum(mx, cs)
                     s_acc = cs if s_acc is None else (s_acc + cs)
-                any_s = None
-                for sch in node.shoulds:
-                    cm, cs = ev(sch)
-                    any_s = cm if any_s is None else (any_s | cm)
-                    contrib = np.where(cm, cs, 0.0)
-                    s_acc = contrib if s_acc is None else (s_acc + contrib)
                 if not node.musts:
                     m_acc = any_s if any_s is not None else zero_m
+                if node.msm:
+                    m_acc = (m_acc & (n_s >= node.msm) if n_s is not None
+                             else zero_m)
+                if mx is not None:
+                    # DisjunctionMaxQuery over the SHOULD scores
+                    s_acc = mx + node.tie * (s_acc - mx) if node.tie else mx
                 for nch in node.nots:
                     cm, _ = ev(nch)
                     m_acc = m_acc & ~cm
@@ -1787,6 +1760,60 @@ def _tree_kernel_factory(
         yield _heap_frame(heap)
 
     return kernel
+
+
+def check_tree_spec(leaves: list, root) -> None:
+    """Raise ValidationError unless the tree kernel can run
+    ``(leaves, root)`` exactly:
+
+    - every scored leaf has a positive weight (a non-positive weight
+      inverts the block-max skip bounds);
+    - no (field, term) pair is shared between a phrase constituent and
+      any other leaf (the positions scan and the impacts scan would
+      double-carry the same blocks);
+    - every node's msm is >= 0, and a ``tie`` lies in [0, 1] on a node
+      without musts (where the sum bounds dominate the dismax score).
+    """
+    term_pairs: set[tuple[str, str]] = set()
+    phrase_pairs: set[tuple[str, str]] = set()
+    for le in leaves:
+        if le.scored and not le.weight > 0:
+            raise ValidationError(
+                "tree kernel leaves need positive weights (a "
+                "non-positive weight inverts the skip bounds)",
+                {"leaf": le},
+            )
+        if isinstance(le, PhraseTreeLeaf):
+            pp = {(le.field, t_) for t_ in le.terms}
+            shared = pp & (term_pairs | phrase_pairs)
+            phrase_pairs |= pp
+        else:
+            pp = {(le.field, le.term)}
+            shared = pp & phrase_pairs
+            term_pairs |= pp
+        if shared:
+            raise ValidationError(
+                "a phrase constituent may not share a (field, term) "
+                "pair with another tree leaf",
+                {"pairs": sorted(shared)},
+            )
+
+    def walk(node) -> None:
+        if isinstance(node, int):
+            return
+        if node.msm < 0 or (
+            node.tie is not None
+            and (node.musts or not 0.0 <= node.tie <= 1.0)
+        ):
+            raise ValidationError(
+                "tree node needs msm >= 0 and, with a tie, no musts "
+                "and 0 <= tie <= 1",
+                {"msm": node.msm, "tie": node.tie},
+            )
+        for c in node.musts + node.shoulds + node.nots:
+            walk(c)
+
+    walk(root)
 
 
 def wand_tree_topk(
@@ -1806,12 +1833,10 @@ def wand_tree_topk(
     query keys' blocks — ``((a AND b) OR (c AND d)) NOT e`` at any
     nesting depth, no join per clause.
 
-    The caller guarantees positive weights on scored leaves (a
-    non-positive weight would invert the bounds) and — when
-    PhraseTreeLeaf leaves are present — that no (field, term) pair is
-    shared between a phrase constituent and anything else (the
-    positions scan and the impacts scan would double-carry the same
-    blocks). Leaves absent from the term dictionary are pruned here:
+    The spec is checked first (``check_tree_spec``: positive scored
+    weights, no pair shared with a phrase constituent, msm >= 0, tie
+    in [0, 1]); a spec the kernel cannot run exactly raises
+    ValidationError. Leaves absent from the term dictionary are pruned here:
     an absent leaf can never match (a phrase leaf is present only if
     ALL its terms are), so subtrees it renders impossible drop out,
     and if the root itself becomes impossible the result is empty.
@@ -1821,6 +1846,7 @@ def wand_tree_topk(
     with NULL, so position bytes are only read for the blocks a phrase
     actually needs. Both scans union before the chunk-range
     co-location — still one streaming doc-ordered pass."""
+    check_tree_spec(leaves, root)
     empty = lambda: index.spark.createDataFrame(  # noqa: E731
         [], "doc_id long, score double"
     )
@@ -1833,8 +1859,8 @@ def wand_tree_topk(
     # exclusion-only keys skip the per-block impacts fold entirely
     unbounded = {fkey_of(le) for le in term_leaves} - scored_fkeys
     if pairs:
-        key_idfs, _ws, blocks = _segment_scan(
-            index, pairs, None, unbounded_keys=unbounded
+        key_idfs, blocks = _segment_scan(
+            index, pairs, unbounded_keys=unbounded
         )
     else:
         key_idfs, blocks = {}, None
@@ -1853,8 +1879,8 @@ def wand_tree_topk(
             if le.scored
             for t_ in le.terms
         }
-        p_idfs, _pws, p_blocks = _segment_scan(
-            index, p_pairs, None, unbounded_keys=p_unbounded
+        p_idfs, p_blocks = _segment_scan(
+            index, p_pairs, unbounded_keys=p_unbounded
         )
     else:
         p_idfs, p_blocks = {}, None
@@ -1884,39 +1910,31 @@ def wand_tree_topk(
     for le in phrase_leaves:
         if le.lid not in present_lids:
             continue
-        spec = _phrase_spec(index, le.field, le.terms, le.weight, p_idfs)
-        spec.update(lid=le.lid, scored=le.scored)
-        phrases.append(spec)
+        phrases.append(_phrase_spec(index, le, p_idfs))
         # phrase leaves ride leaf_by_lid with fk=None so the kernel's
         # countable-collection treats them uniformly
         leaf_by_lid[le.lid] = (None, float(le.weight), le.scored)
     cols = ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs",
-            "norms", "positions"]
-    parts = []
-    if blocks is not None and occs:
-        parts.append(
-            blocks.withColumn(
-                "positions", F.lit(None).cast("binary")
-            ).select(*cols)
-        )
+            "norms"]
     phrase_fkeys = frozenset(fk for p in phrases for fk in p["fkeys"])
-    if p_blocks is not None and phrases:
-        pb = p_blocks
+    if not phrases:
+        # positions are never consulted without phrase leaves
+        allb = blocks
+    else:
+        cols.append("positions")
+        allb = p_blocks
         if len(phrase_fkeys) < len(p_idfs):
             # some phrase was dropped (absent constituent) — its other
             # terms' blocks are unneeded
-            pb = pb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
-        parts.append(pb.select(*cols))
-    if not parts:
-        return empty()
-    allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    if not phrases:
-        # positions are never consulted without phrase leaves
-        cols = cols[:-1]
+            allb = allb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
         allb = allb.select(*cols)
+        if occs:
+            allb = blocks.withColumn(
+                "positions", F.lit(None).cast("binary")
+            ).select(*cols).unionByName(allb)
     npart = n_partitions or index.spark.sparkContext.defaultParallelism
     co = _co_located(allb, cols, npart)
-    kernel = _tree_kernel_factory(
+    kernel = _make_tree_kernel(
         key_idfs,
         _key_denoms(index, key_idfs),
         occs,
@@ -1928,419 +1946,6 @@ def wand_tree_topk(
         excluded=_excluded_ids(index),
         phrases=phrases,
         phrase_fkeys=phrase_fkeys,
-    )
-    local = co.mapInPandas(kernel, "doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def _group_kernel_factory(
-    key_idfs: dict,
-    key_denoms: dict,
-    key_occs: dict,
-    must_gids: frozenset,
-    not_keys: frozenset,
-    k: int,
-    search_after: tuple[float, int] | None = None,
-    excluded: np.ndarray | None = None,
-    phrases: list | None = None,
-    phrase_fkeys: frozenset = frozenset(),
-    dismax_tie: float | None = None,
-    msm: int = 0,
-):
-    """Per-partition streaming kernel for one-level boolean GROUP
-    trees — the segment analogue of search._scored_group_tree. Lucene
-    semantics: a doc's score is the sum of its matching non-prohibited
-    keys, every MUST group must be matched by at least one member, any
-    MUST_NOT match excludes the doc.
-
-    ``key_occs`` maps each scored fkey to its OCCURRENCE list
-    ``[(gid, weight), ...]`` — a term clause repeated across groups
-    (``a AND (a OR b)``) decodes its blocks once and fans the base
-    score out per occurrence, exactly the DataFrame path's broadcast
-    join fan-out. Each block's ``block_max_score`` is pre-folded with
-    the SUM of its key's occurrence weights, so the chunk/block bounds
-    stay exact upper bounds of the fanned-out sum.
-
-    ``phrases`` adds PHRASE members: each spec dict carries
-    {gid, is_not, offsets, term_idfs, fkey_term, fkeys, idf_sum,
-    denom} and is scored in-chunk by the shared positions evaluator
-    (_eval_phrase_chunk — lazy per-block positions decode). A phrase
-    is live in a chunk only if ALL its constituent keys appear there
-    (chunk == doc-id range). Scored phrases contribute their derived
-    bound idf_sum * min_t(chunk_max_t / idf_t) to the chunk upper
-    bound; exclusion phrases contribute nothing and are never
-    bound-skipped.
-
-    Bound soundness: NOT keys never contribute to the chunk/block
-    upper bounds (exclusion only removes docs, so positive-only sums
-    stay valid upper bounds), and only their doc ids are decoded —
-    never skipped on bounds, since missing an exclusion would be a
-    wrong answer, not a missed optimization. A chunk that lacks every
-    member of some MUST group is skipped wholesale: chunk == doc-id
-    range, so no doc of this chunk can satisfy that group elsewhere.
-    Skipping a term block (own max + others < θ) may also drop that
-    block's MUST marks — sound, because any such doc's total score is
-    below θ and it could not enter the heap anyway.
-
-    ``dismax_tie`` switches the per-doc combine from the boolean SUM
-    of group scores to DisjunctionMaxQuery's ``max + tie * (sum -
-    max)`` (caller guarantees all-SHOULD groups with positive weights
-    and 0 <= tie <= 1). Every chunk/block bound in this kernel is an
-    upper bound of the SUM of group scores, and for tie <= 1 the
-    dismax combine is <= that sum, so all skip decisions stay sound —
-    merely conservative by the (1 - tie) * (sum - max) slack.
-
-    ``msm`` keeps only docs matching at least that many distinct
-    SHOULD (scored, non-MUST) groups — minimumNumberShouldMatch for
-    mixed MUST/SHOULD booleans (the caller guarantees one clause per
-    group and distinct pairs, so matched groups == matched clauses,
-    the tally search._scored_term_group filters on). Sound under
-    block skipping exactly like the MUST tally: a doc inside any
-    skipped block cannot beat theta, so an undercount only drops docs
-    already out of the top-k."""
-    phrases = phrases or []
-    n_must = len(must_gids)
-    all_gids = [g for occs in key_occs.values() for g, _ in occs] + [
-        p["gid"] for p in phrases
-    ]
-    max_gid = max(all_gids) + 1
-    is_must_gid = np.zeros(max_gid, dtype=bool)
-    for g in must_gids:
-        is_must_gid[g] = True
-    # msm tally domain: scored (non-NOT) gids that are not MUST groups
-    is_opt_gid = np.zeros(max_gid, dtype=bool)
-    if msm:
-        for occs in key_occs.values():
-            for g, _ in occs:
-                is_opt_gid[g] = True
-        for p in phrases:
-            if not p["is_not"]:
-                is_opt_gid[p["gid"]] = True
-        is_opt_gid &= ~is_must_gid
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) >= k else -math.inf
-
-        def process(cpdf: pd.DataFrame) -> None:
-            if phrase_fkeys:
-                ph = cpdf[cpdf["fkey"].isin(phrase_fkeys)]
-                rest = cpdf[~cpdf["fkey"].isin(phrase_fkeys)]
-            else:
-                ph = None
-                rest = cpdf
-            if not_keys:
-                neg = rest[rest["fkey"].isin(not_keys)]
-                pos = rest[~rest["fkey"].isin(not_keys)]
-            else:
-                neg = None
-                pos = rest
-            # phrase liveness in this chunk: every constituent key
-            # present (chunk == doc range, so a partially-present
-            # phrase cannot match here)
-            live: list = []
-            if phrases and ph is not None and len(ph):
-                have = set(ph["fkey"].unique())
-                for p in phrases:
-                    if p["fkeys"] <= have:
-                        live.append((p, ph[ph["fkey"].isin(p["fkeys"])]))
-            any_scored = len(pos) > 0 or any(
-                not p["is_not"] for p, _ in live
-            )
-            if not any_scored:
-                return
-            if n_must:
-                present = (
-                    {
-                        g
-                        for f in pos["fkey"].unique()
-                        for g, _ in key_occs[f]
-                    }
-                    if len(pos)
-                    else set()
-                )
-                present |= {p["gid"] for p, _ in live}
-                if not all(g in present for g in must_gids):
-                    return
-            key_maxes = (
-                pos.groupby("fkey")["block_max_score"].max()
-                if len(pos)
-                else None
-            )
-            tm_sum = float(key_maxes.sum()) if key_maxes is not None else 0.0
-            for p, rows in live:
-                if p["is_not"]:
-                    continue
-                tm_sum += _phrase_chunk_bound(p, rows)
-            # STRICT bound (ties must be decoded) — see _kernel_factory
-            if len(heap) >= k and tm_sum < theta():
-                return
-            doc_parts, score_parts, gid_parts = [], [], []
-            # canonical (field, term) iteration order: per-doc sums add
-            # in concatenation order, so the row order must not depend
-            # on file/batch layout or identical docs in different
-            # chunks drift by 1 ulp (see _kernel_factory)
-            pos = pos.sort_values("fkey", kind="stable",
-                                  ignore_index=True)
-            for row in pos.itertuples(index=False):
-                others = tm_sum - float(key_maxes[row.fkey])
-                if (
-                    len(heap) >= k
-                    and row.block_max_score + others < theta()
-                ):
-                    continue
-                ids = codec.delta_decode(
-                    codec.decode_block(row.doc_deltas)
-                )
-                tfs = codec.decode_block(row.tfs).astype(np.float64)
-                norms = np.frombuffer(row.norms, dtype=np.uint8)
-                idf = key_idfs[row.fkey]
-                denom = key_denoms[row.fkey]
-                base = idf * tfs / (tfs + denom[norms])
-                for g, w in key_occs[row.fkey]:
-                    doc_parts.append(ids)
-                    score_parts.append(w * base)
-                    gid_parts.append(
-                        np.full(ids.size, g, dtype=np.int64)
-                    )
-            ex_parts = []
-            for p, rows in live:
-                ids_p, sc_p = _eval_phrase_chunk(
-                    rows, p["fkey_term"], p["offsets"], p["idf_sum"],
-                    p["denom"], score=not p["is_not"],
-                )
-                if not ids_p.size:
-                    continue
-                if p["is_not"]:
-                    ex_parts.append(ids_p)
-                else:
-                    doc_parts.append(ids_p)
-                    score_parts.append(sc_p)
-                    gid_parts.append(
-                        np.full(ids_p.size, p["gid"], dtype=np.int64)
-                    )
-            if not doc_parts:
-                return
-            docs = np.concatenate(doc_parts)
-            scores = np.concatenate(score_parts)
-            gids = np.concatenate(gid_parts)
-            uniq, inv = np.unique(docs, return_inverse=True)
-            if dismax_tie is None:
-                agg = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(agg, inv, scores)
-            else:
-                # per-(doc, group) partial sums in canonical fkey
-                # order, then the dismax combine per doc; group scores
-                # are strictly positive (positive weights over BM25 >
-                # 0), so the zero-initialized max is safe
-                pair = inv.astype(np.int64) * max_gid + gids
-                up, pinv = np.unique(pair, return_inverse=True)
-                psum = np.zeros(up.size, dtype=np.float64)
-                np.add.at(psum, pinv, scores)
-                pdoc = up // max_gid
-                ssum = np.zeros(uniq.size, dtype=np.float64)
-                np.add.at(ssum, pdoc, psum)
-                smax = np.zeros(uniq.size, dtype=np.float64)
-                np.maximum.at(smax, pdoc, psum)
-                agg = smax + dismax_tie * (ssum - smax)
-            keep = np.ones(uniq.size, dtype=bool)
-            if n_must:
-                mm = is_must_gid[gids]
-                # distinct (doc, must-group) pairs per doc
-                pair = np.unique(inv[mm] * max_gid + gids[mm])
-                cnt = np.bincount(pair // max_gid, minlength=uniq.size)
-                keep &= cnt == n_must
-            if msm:
-                om = is_opt_gid[gids]
-                # distinct (doc, should-group) pairs per doc
-                pair_o = np.unique(inv[om] * max_gid + gids[om])
-                cnt_o = np.bincount(pair_o // max_gid,
-                                    minlength=uniq.size)
-                keep &= cnt_o >= msm
-            if neg is not None and len(neg):
-                ex_parts.extend(
-                    codec.delta_decode(codec.decode_block(r.doc_deltas))
-                    for r in neg.itertuples(index=False)
-                )
-            if ex_parts:
-                keep &= ~np.isin(uniq, np.concatenate(ex_parts))
-            uniq, agg = uniq[keep], agg[keep]
-            _push_topk(heap, k, uniq, agg, search_after, excluded)
-
-        _stream_chunks(batches, process)
-        yield _heap_frame(heap)
-
-    return kernel
-
-
-def wand_group_topk(
-    index,
-    groups: list[tuple[str, list]],
-    k: int = 10,
-    n_partitions: int | None = None,
-    search_after: tuple[float, int] | None = None,
-    dismax_tie: float | None = None,
-    msm: int = 0,
-) -> DataFrame:
-    """Top-k (doc_id, score) for a one-level boolean GROUP tree over
-    the compressed segments — ``groups`` is a list of
-    ``(occ, members)`` with occ in {'MUST', 'SHOULD', 'MUST_NOT'} and
-    each member either ``(field, term, effective_boost)`` or a
-    ``PhraseMember`` (group boosts pre-folded into the member boosts
-    by the caller). Executes the same semantics as
-    search._scored_group_tree — extended with in-scan phrase scoring —
-    on the streaming block-max kernel: one pruned scan of the query
-    keys' blocks, no join per clause.
-
-    Phrase members' constituent keys go through a SEPARATE pushed-down
-    scan that keeps the ``positions`` column; term keys' scan replaces
-    it with NULL, so position bytes are only read for the blocks a
-    phrase actually needs. Both scans union before the chunk-range
-    co-location, so the kernel still streams one doc-ordered pass.
-
-    A MUST group with no member present in the dictionary empties the
-    result (a phrase member is present only if ALL its terms are);
-    absent SHOULD/MUST_NOT members just drop out. Duplicate TERM pairs
-    across scored clauses are supported — each block decodes once and
-    fans out per occurrence, with the block bound folded by the summed
-    weights. The caller guarantees: positive boosts on all scored
-    members, no pair shared between a phrase constituent and anything
-    else, and no pair with both a scored and a MUST_NOT occurrence
-    (a MUST_NOT pair excludes every matching doc, so its scored
-    occurrences are dead weight — search._wand_route drops them).
-
-    ``dismax_tie`` runs DisjunctionMaxQuery semantics instead: each
-    group is one disjunct (caller passes all-SHOULD groups, boosts
-    pre-folded), per-doc score = max(group scores) + tie * (sum -
-    max). Bounds stay the sum-combine bounds — sound for tie <= 1
-    (see _group_kernel_factory).
-
-    ``msm`` keeps only docs matching >= that many distinct SHOULD
-    groups (minimumNumberShouldMatch; the router passes one clause
-    per group with distinct pairs so groups == clauses — see
-    _group_kernel_factory for the tally and its soundness)."""
-    empty = lambda: index.spark.createDataFrame(  # noqa: E731
-        [], "doc_id long, score double"
-    )
-    term_pairs: list[tuple[str, str]] = []
-    weights: dict = {}
-    not_fkeys: set[str] = set()
-    phrase_pairs: list[tuple[str, str]] = []
-    phrase_not_fkeys: set[str] = set()
-    for occ, members in groups:
-        for m in members:
-            if isinstance(m, PhraseMember):
-                for t_ in dict.fromkeys(m.terms):
-                    phrase_pairs.append((m.field, t_))
-                    if occ == "MUST_NOT":
-                        # exclusion-only: bounds never consulted, so
-                        # the impacts fold is skipped for these keys
-                        phrase_not_fkeys.add(f"{m.field}\x1f{t_}")
-            else:
-                f_, t_, b_ = m
-                pair = (f_, t_)
-                if pair not in weights:
-                    term_pairs.append(pair)
-                    weights[pair] = 0.0
-                # NOT members are exclusion-only: never scored, never
-                # in bounds — weight is irrelevant but must be
-                # positive for the shared scan preamble; their
-                # per-block impacts fold is skipped (unbounded_keys)
-                if occ == "MUST_NOT":
-                    weights[pair] = 1.0
-                    not_fkeys.add(f"{f_}\x1f{t_}")
-                else:
-                    # summed across occurrences: the folded block
-                    # bound must cap the per-occurrence fan-out sum
-                    weights[pair] += b_
-    if term_pairs:
-        key_idfs, _ws, blocks = _segment_scan(
-            index, term_pairs, weights, unbounded_keys=not_fkeys
-        )
-    else:
-        key_idfs, blocks = {}, None
-    if phrase_pairs:
-        p_idfs, _pws, p_blocks = _segment_scan(
-            index, phrase_pairs, None, unbounded_keys=phrase_not_fkeys
-        )
-    else:
-        p_idfs, p_blocks = {}, None
-
-    key_occs, must_gids, not_keys = {}, set(), set()
-    phrases: list[dict] = []
-    next_gid = 0
-    for occ, members in groups:
-        present_terms, present_phrases = [], []
-        for m in members:
-            if isinstance(m, PhraseMember):
-                if all(
-                    f"{m.field}\x1f{t_}" in p_idfs for t_ in m.terms
-                ):
-                    present_phrases.append(m)
-            elif f"{m[0]}\x1f{m[1]}" in key_idfs:
-                present_terms.append(m)
-        if not present_terms and not present_phrases:
-            if occ == "MUST":
-                return empty()
-            continue
-        gid = next_gid
-        next_gid += 1
-        if occ == "MUST":
-            must_gids.add(gid)
-        for f_, t_, b_ in present_terms:
-            fk = f"{f_}\x1f{t_}"
-            if occ == "MUST_NOT":
-                not_keys.add(fk)
-            else:
-                key_occs.setdefault(fk, []).append((gid, b_))
-        for m in present_phrases:
-            spec = _phrase_spec(index, m.field, m.terms, m.boost, p_idfs)
-            spec.update(gid=gid, is_not=occ == "MUST_NOT")
-            phrases.append(spec)
-    scored_phrases = any(not p["is_not"] for p in phrases)
-    # a pure-negative surviving tree matches nothing
-    if not key_occs and not scored_phrases:
-        return empty()
-
-    cols = ["chunk", "fkey", "block_max_score", "doc_deltas", "tfs",
-            "norms", "positions"]
-    parts = []
-    if blocks is not None and (key_occs or not_keys):
-        parts.append(
-            blocks.withColumn(
-                "positions", F.lit(None).cast("binary")
-            ).select(*cols)
-        )
-    phrase_fkeys = frozenset(
-        fk for p in phrases for fk in p["fkeys"]
-    )
-    if p_blocks is not None and phrases:
-        pb = p_blocks
-        if len(phrase_fkeys) < len(p_idfs):
-            # some phrase was dropped (absent constituent) — its other
-            # terms' blocks are unneeded
-            pb = pb.filter(F.col("fkey").isin(sorted(phrase_fkeys)))
-        parts.append(pb.select(*cols))
-    if not parts:
-        return empty()
-    allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    npart = n_partitions or index.spark.sparkContext.defaultParallelism
-    co = _co_located(allb, cols, npart)
-    kernel = _group_kernel_factory(
-        key_idfs,
-        _key_denoms(index, key_idfs),
-        key_occs,
-        frozenset(must_gids),
-        frozenset(not_keys),
-        k,
-        search_after=search_after,
-        excluded=_excluded_ids(index),
-        phrases=phrases,
-        phrase_fkeys=phrase_fkeys,
-        dismax_tie=dismax_tie,
-        msm=msm,
     )
     local = co.mapInPandas(kernel, "doc_id long, score double")
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -671,12 +671,11 @@ def test_duplicate_pair_flat_bool_routes_and_merges(disk_index):
             (occ, TermQ(1.0, "text", "window")),
         ))
         route = _wand_route(disk_index, node)
-        assert route is not None and route[2] == (
-            "and" if occ == MUST else "or"
-        )
-        _, pairs, _, weights = route
-        assert pairs == [("text", "merge"), ("text", "window")]
-        assert weights[("text", "merge")] == 3.0
+        assert route is not None and route[2] == "tree"
+        leaves, root = route[1]
+        assert [(le.field, le.term, le.weight) for le in leaves] == [
+            ("text", "merge", 3.0), ("text", "window", 1.0)]
+        assert (root.musts if occ == MUST else root.shoulds) == (0, 1)
         want = disk_index.search(node, results_per_page=10,
                                  with_hit=False,
                                  strategy="dataframe").collect()
@@ -1235,7 +1234,7 @@ def test_multi_field_map_with_phrase_routes_group(disk_index):
     node = parse({"text": "the merge", "lang": "de"},
                  disk_index.specs, disk_index.analyzers)
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "group"
+    assert route is not None and route[2] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1289,7 +1288,7 @@ def test_duplicate_pair_group_tree_routes_kernel(disk_index, node_fn):
 
     node = node_fn(BoolQ, TermQ, MUST, SHOULD)
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "group"
+    assert route is not None and route[2] == "tree"
     want = disk_index.search(node, results_per_page=10, with_hit=False,
                              strategy="dataframe").collect()
     got = disk_index.search(node, results_per_page=10, with_hit=False,
@@ -1315,7 +1314,7 @@ def test_duplicate_pair_must_fully_excluded_is_empty(disk_index):
         ("MUST_NOT", TermQ(1.0, "text", "merge")),
     ))
     route = _wand_route(disk_index, node)
-    assert route is not None and route[2] == "empty"
+    assert route is not None and route[2] == "tree"
     assert disk_index.search(node, with_hit=False,
                              strategy="wand").collect() == []
     assert disk_index.search(node, with_hit=False,
@@ -2802,3 +2801,105 @@ def test_msm_kernel_keyset_and_fuzz(disk_index):
         assert [(r["doc_id"], r["score"]) for r in a] == [
             (r["doc_id"], r["score"]) for r in b
         ], (trial, terms, msm)
+
+
+# --- one boolean kernel: every boolean-family shape is a tree spec ----
+
+
+def _boolean_family_shapes():
+    from lucene_clj_spark.query import (
+        MUST,
+        SHOULD,
+        BoolQ,
+        DisMaxQ,
+        FuzzyQ,
+        PhraseQ,
+        TermQ,
+    )
+
+    T = lambda t, b=1.0, f="text": TermQ(b, f, t)  # noqa: E731
+    dismax = lambda tie: DisMaxQ(1.0, (  # noqa: E731
+        T("merge"),
+        BoolQ(1.0, ((SHOULD, T("dup")), (SHOULD, T("vector", 2.0)))),
+    ), tie)
+    return {
+        "term": T("merge"),
+        "flat_and": BoolQ(1.0, ((MUST, T("merge")), (MUST, T("window")))),
+        "flat_or": BoolQ(1.0, ((SHOULD, T("merge")), (SHOULD, T("dup")),
+                               (SHOULD, T("vector")))),
+        "multi_field_map": {"text": "merge", "lang": "de"},
+        "duplicate_pair": BoolQ(1.0, ((SHOULD, T("merge")),
+                                      (SHOULD, T("merge", 2.0)),
+                                      (SHOULD, T("window")))),
+        "msm_should": BoolQ(1.0, ((SHOULD, T("merge")), (SHOULD, T("dup")),
+                                  (SHOULD, T("vector"))), 2),
+        "msm_mixed": BoolQ(1.0, ((MUST, T("merge")), (SHOULD, T("dup")),
+                                 (SHOULD, T("vector"))), 1),
+        "group_phrase": BoolQ(1.0, (
+            (MUST, BoolQ(1.0, ((SHOULD, PhraseQ(1.0, "text",
+                                                ("the", "merge"))),
+                               (SHOULD, T("dup"))))),
+            (SHOULD, T("window")),
+        )),
+        "dismax_0": dismax(0.0),
+        "dismax_0.3": dismax(0.3),
+        "dismax_1": dismax(1.0),
+        "fuzzy": FuzzyQ(1.0, "text", "merg"),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_boolean_family_shapes()))
+def test_boolean_family_routes_one_tree_kernel(disk_index, name):
+    """Every boolean-family shape routes to the single tree kernel
+    and runs as exactly one kernel stage."""
+    from lucene_clj_spark.query import parse
+    from lucene_clj_spark.search import _wand_route
+
+    q = _boolean_family_shapes()[name]
+    node = parse(q, disk_index.specs, disk_index.analyzers, "text")
+    route = _wand_route(disk_index, node)
+    assert route is not None and route[2] == "tree", route
+    plan = disk_index.search(node, with_hit=False)
+    s = plan._jdf.queryExecution().executedPlan().toString()
+    assert s.count("MapInPandas") == 1, s
+
+
+def test_tree_kernel_validates_its_input(disk_index):
+    """The public kernels behind every boolean wrapper reject specs
+    they cannot run exactly instead of serving inverted pruning."""
+    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.wand import (
+        PhraseTreeLeaf,
+        TreeLeaf,
+        TreeNode,
+        wand_tree_topk,
+    )
+
+    with pytest.raises(ValidationError):
+        wand_topk(disk_index, "text", ["merge"],
+                  term_weights={"merge": -1.0})
+    leaves = [PhraseTreeLeaf(0, "text", ("the", "merge"), 1.0, True),
+              TreeLeaf(1, "text", "merge", 1.0, True)]
+    with pytest.raises(ValidationError):
+        wand_tree_topk(disk_index, leaves, TreeNode((0, 1), (), ()))
+    dismax = TreeNode((), (0, 1), (), tie=1.5)
+    with pytest.raises(ValidationError):
+        wand_tree_topk(disk_index, [TreeLeaf(0, "text", "merge", 1.0, True),
+                                    TreeLeaf(1, "text", "dup", 1.0, True)],
+                       dismax)
+
+
+@pytest.mark.parametrize("kernel", ["sloppy_phrase", "span_near"])
+def test_positional_kernels_reject_repeated_terms(disk_index, kernel):
+    """Repeated terms raise like the DataFrame path, not an empty
+    frame."""
+    from lucene_clj_spark.errors import ValidationError
+    from lucene_clj_spark.wand import sloppy_phrase_topk, span_near_topk
+
+    with pytest.raises(ValidationError):
+        if kernel == "sloppy_phrase":
+            sloppy_phrase_topk(disk_index, "text", ["the", "merge", "the"],
+                               slop=2)
+        else:
+            span_near_topk(disk_index, "text", ["the", "merge", "the"],
+                           slop=2)
